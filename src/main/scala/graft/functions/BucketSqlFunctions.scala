@@ -76,8 +76,7 @@ object BucketSqlFunctions {
 
   /** Register the text-hash expressions (`simhash_fingerprint(shingles)`,
     * `minhash_signature(shingles)`, `min_window_md5(toks, width)`) for the
-    * SQL surface — the session-level twin of their GraftExtensions
-    * injections. */
+    * SQL surface of this session. */
   def registerTextHash(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "simhash_fingerprint",

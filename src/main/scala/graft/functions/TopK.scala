@@ -61,13 +61,13 @@ object TopK {
 
   /** Production grouped top-k over a scored frame: `(groupCol, cid, sim)` →
     * `(groupCol, cid, sim, rk)` with rk 1..k by (sim desc, cid asc) — the
-    * documented DEFAULT for ≥~100-query retrieval workloads (measured r9,
-    * `graft.TopKBench` at sf0.1, 2000 candidates, k=10: 1.63× over the
-    * row_number window at 1000 queries, break-even ~100, window wins at 5 —
-    * the aggregator ships ≤ k rows per group per map task where the window
-    * shuffles every scored pair; the gap widens with queries × candidates).
-    * Oracle-checked against the window form by `similarity_topk_agg`, which
-    * routes through here. */
+    * documented DEFAULT for ≥~100-query retrieval workloads (measured r9 at
+    * sf0.1, 2000 candidates, k=10: 1.63× over the row_number window at 1000
+    * queries, break-even ~100, window wins at 5 — the aggregator ships ≤ k
+    * rows per group per map task where the window shuffles every scored
+    * pair; the gap widens with queries × candidates). Oracle-checked
+    * against the window form by `similarity_topk_agg`, which routes through
+    * here, and row for row by TopKSpec. */
   def ranked(scored: org.apache.spark.sql.DataFrame, groupCol: String, k: Int)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._

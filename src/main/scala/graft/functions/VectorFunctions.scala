@@ -30,8 +30,7 @@ case class CosineSimilarity(
   // Mirrors Divide's mode surface (Divide captures EvalMode at parse time;
   // so does the SQL registration below): ANSI throws DIVIDE_BY_ZERO on a
   // zero divisor — empty array, zero-norm, underflow — LEGACY and TRY
-  // return NULL. This keeps FuseCosineRule semantics-preserving in BOTH
-  // modes, so the fusion also fires under Spark 4's ANSI default.
+  // return NULL, so the expression equals the HOF form in BOTH modes.
   private def failOnError: Boolean = evalMode == EvalMode.ANSI
 
   override def dataType: DataType = DoubleType
@@ -51,8 +50,8 @@ case class CosineSimilarity(
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "cosine_similarity"
 
-  // Null semantics mirror the HOF formulation under the SAME eval mode (so
-  // FuseCosineRule is a true equivalence): arrays of different lengths
+  // Null semantics mirror the HOF formulation under the SAME eval mode
+  // (property-tested in VectorFunctionsSpec): arrays of different lengths
   // (zip_with null-pads, the fold propagates null) or any null element ⇒
   // NULL in every mode; a zero divisor — empty array, zero-norm vector, or
   // norm underflow — ⇒ NULL under LEGACY/TRY exactly as legacy Divide

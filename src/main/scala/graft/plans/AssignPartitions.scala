@@ -44,8 +44,7 @@ final case class AssignPartitions(
 }
 
 /** Plans [[AssignPartitions]] into [[AssignPartitionsExec]]. Registered
-  * per-session by `BucketRouting.routeUniformNative` (idempotent) or
-  * cluster-wide via `GraftExtensions` (`injectPlannerStrategy`). */
+  * per-session by `BucketRouting.routeUniformNative` (idempotent). */
 object GraftStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AssignPartitions(ranges, bucketAttr, ptAttr, child) =>

@@ -1646,9 +1646,9 @@ object AnnQueries {
     // aggregator at production query counts"): identical output contract
     // and oracle as hard_negatives, but ranking through TopK.ranked with
     // k = NegHi — at most NegHi rows per query leave each map task instead
-    // of every scored pair entering a rank window (TopKBench r9: agg 1.63×
-    // at 1000 queries; the registry's 5-query window form stays for the
-    // small-workload regime). Labels re-attach AFTER the bounded-buffer
+    // of every scored pair entering a rank window (TopK.ranked's scaladoc:
+    // agg 1.63× at 1000 queries; the registry's 5-query window form stays
+    // for the small-workload regime). Labels re-attach AFTER the bounded-buffer
     // ranking: the ranked frame is ≤ queries·NegHi rows, broadcast back
     // onto the corpus for clabel — never a second corpus-wide rank input.
     "hard_negatives_agg" -> Q(

@@ -953,10 +953,11 @@ object TextQueries {
     "bm25_topk" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        val qterms = Seq(
+        val queryTerms = Seq(
           (1, "hash"), (1, "join"), (1, "merge"),
           (2, "window"), (2, "sort"), (2, "order"),
-          (3, "stream"), (3, "batch"), (3, "spark")).toDF("qid", "term")
+          (3, "stream"), (3, "batch"), (3, "spark"))
+        val qterms = queryTerms.toDF("qid", "term")
         // r16 batch 3 (guide §2.3 "aggregate before you shuffle"): the old
         // (doc, term) agg fed dl (→ stats + the doc-length join) and tfq
         // (→ dfq + the scoring rows), re-running the corpus token explode
@@ -967,8 +968,7 @@ object TextQueries {
         // (doc, term, tf) rows come back via stack + tf > 0 (≡ the old
         // groupBy existence), df/stats re-aggregate the checkpoint, and the
         // corpus-sized dl join disappears outright (dl rides the row).
-        val qlist = Seq("hash", "join", "merge", "window", "sort", "order",
-          "stream", "batch", "spark")
+        val qlist = queryTerms.map(_._2).distinct
         val per = Q.truncate(Tables.load(s, dir, "documents")
           .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
           .groupBy("doc_id")

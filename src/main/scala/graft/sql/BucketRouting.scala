@@ -183,7 +183,7 @@ object BucketRouting {
     * (c)): same per-(task, bucket) counter semantics, but executed by
     * [[graft.plans.AssignPartitionsExec]] directly over `UnsafeRow`s —
     * no Row encoder round-trip. Registers [[graft.plans.GraftStrategy]] on
-    * the session idempotently (or use `GraftExtensions` cluster-wide). */
+    * the session idempotently. */
   def routeUniformNative(
       df: DataFrame,
       cfg: BucketPriorityConfig,

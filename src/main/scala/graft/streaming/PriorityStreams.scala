@@ -205,9 +205,9 @@ object PriorityStreams {
     *
     * Float parity with the batch ivf_topk: the in-row probe cosine is the
     * HOF left-fold dot/(√na·√nb) with a `nullif` zero-denominator guard —
-    * the formulation [[graft.functions.CosineSimilarity]] documents itself
-    * bit-identical to (FuseCosineRule's equivalence), with NULL sims
-    * coalesced to −∞ exactly like the batch argmax's NULLS-LAST coalesce;
+    * the formulation [[graft.functions.CosineSimilarity]] is bit-identical
+    * to (VectorFunctionsSpec pins it), with NULL sims coalesced to −∞
+    * exactly like the batch argmax's NULLS-LAST coalesce;
     * the (−sim, cid) sort matches the batch window's (sim DESC, cid)
     * tie-break (double negation is exact). AnnStreamSpec pins the output
     * ≡ the batch ivf_topk rows on the same inputs.
@@ -1248,7 +1248,7 @@ object PriorityStreams {
     * resurrection resets it and re-arms). State is kept after churn so a
     * returning user classifies `resurrected`, as in batch — a production
     * deployment bounds the churned tail with TTL if needed. */
-  final class LifecycleTimerProcessor(targetedTimers: Boolean = true)
+  final class LifecycleTimerProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         Long, TimedWeekEvent, LifecycleRow] {
     import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode => OM, TimeMode, TimerValues, TTLConfig}
@@ -1279,31 +1279,24 @@ object PriorityStreams {
           out += LifecycleRow(key, w, "resurrected"); last = w; emitted = false
         } // w ≤ last: duplicate of an absorbed week — no-op
       }
-      if (last != Long.MinValue && (last != last0 || emitted != emitted0
-          || !targetedTimers)) {
+      if (last != Long.MinValue && (last != last0 || emitted != emitted0)) {
         st.update((last, emitted))
         // churn is proven once event time passes the END of week last+1 =
-        // the start of day last+14 (weeks step by 7 Monday epoch days)
-        if (targetedTimers) {
-          // The armed deadline is a pure function of (last, emitted):
-          // (last+14)·day when !emitted, none otherwise — so the previous
-          // batch's timer is DERIVED from the prior state instead of
-          // range-scanned via listTimers() (a per-key RocksDB iterator that
-          // was 3-4x of this processor's cost — graft.TimerAbBench). A
-          // divergent stray timer is impossible from this writer, and
-          // handleExpiredTimer's stale-deadline guard makes one a no-op
-          // anyway (defend in depth).
-          val oldDl = if (last0 != Long.MinValue && !emitted0)
-            (last0 + 14) * 86400000L else -1L
-          val newDl = if (!emitted) (last + 14) * 86400000L else -1L
-          if (oldDl != newDl) {
-            if (oldDl >= 0) getHandle.deleteTimer(oldDl)
-            if (newDl >= 0) getHandle.registerTimer(newDl)
-          }
-        } else {
-          // pre-r12 path, kept A/B-able: range-scan and re-arm every batch
-          getHandle.listTimers().foreach(t => getHandle.deleteTimer(t))
-          if (!emitted) getHandle.registerTimer((last + 14) * 86400000L)
+        // the start of day last+14 (weeks step by 7 Monday epoch days).
+        // The armed deadline is a pure function of (last, emitted):
+        // (last+14)·day when !emitted, none otherwise — so the previous
+        // batch's timer is DERIVED from the prior state instead of
+        // range-scanned via listTimers() (a per-key RocksDB iterator that
+        // was 3-4x of this processor's cost — BASELINE.md's round-12
+        // lifecycle-timer A/B). A divergent stray timer is impossible from
+        // this writer, and handleExpiredTimer's stale-deadline guard makes
+        // one a no-op anyway (defend in depth).
+        val oldDl = if (last0 != Long.MinValue && !emitted0)
+          (last0 + 14) * 86400000L else -1L
+        val newDl = if (!emitted) (last + 14) * 86400000L else -1L
+        if (oldDl != newDl) {
+          if (oldDl >= 0) getHandle.deleteTimer(oldDl)
+          if (newDl >= 0) getHandle.registerTimer(newDl)
         }
       }
       out.iterator
@@ -1329,13 +1322,12 @@ object PriorityStreams {
   /** [[LifecycleTimerProcessor]] over a watermarked week stream — the
     * caller applies `withWatermark` on `ts` upstream (the [[idleBuckets]]
     * contract). */
-  def lifecycleTimerStream(weeks: Dataset[TimedWeekEvent],
-      targetedTimers: Boolean = true): Dataset[LifecycleRow] = {
+  def lifecycleTimerStream(weeks: Dataset[TimedWeekEvent]): Dataset[LifecycleRow] = {
     import weeks.sparkSession.implicits._
     weeks
       .groupByKey(_.userId)
       .transformWithState(
-        new LifecycleTimerProcessor(targetedTimers),
+        new LifecycleTimerProcessor,
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
         OutputMode.Update())
   }
